@@ -112,6 +112,39 @@ object Main {
     v.toString
   }
 
+  /** What a run reports once its workload is gone. */
+  final case class Outcome(setup: Seq[(String, Double)], ops: Int, failed: Int,
+      measuredS: Double, finalOk: Boolean, p50: Double, mean: Double,
+      layers: Map[String, Double], detail: Seq[(String, Double)])
+
+  /** Sets up the workload, runs and checks its operations, and reduces
+    * them to an [[Outcome]]. The workload, its inputs and its expected
+    * state are unreachable once this returns, so the retained heap the
+    * caller measures next is the program's, not the benchmark's.
+    */
+  def measure(a: Args, spark: SparkSession, tr: Trace, setup: SetupClock,
+      work: Path): Outcome = {
+    val wl: Workload = a.workload match {
+      case "upload_upsert" => new UploadUpsert(spark, tr, a.seed, work)
+      case "page_browse" => new PageBrowse(spark, tr, a.seed, work)
+      case "gate_mix" => new GateMix(spark, tr, a.seed, a.data)
+    }
+    wl.setup(setup)
+    val ops = ArrayBuffer[Op]()
+    val t0 = System.nanoTime()
+    while (ops.size < wl.minOps || System.nanoTime() - t0 < a.seconds * 1000000000L)
+      ops += wl.op(ops.size)
+    val measuredS = (System.nanoTime() - t0) / 1e9
+    val finalOk = wl.finish()
+    val failed = if (finalOk) ops.count(!_.ok) else ops.size
+    val (p50, mean) = wl.summary(ops.toSeq)
+    val layers =
+      if (!a.trace) Map.empty[String, Double]
+      else { tr.drain(); wl.layers(ops.toSeq) }
+    Outcome(setup.parts.toSeq, ops.size, failed, measuredS, finalOk, p50, mean,
+      layers, wl.detail(ops.toSeq))
+  }
+
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
     val load0 = loadavg()
@@ -122,54 +155,36 @@ object Main {
     val setup = new SetupClock(tr)
     val spark = setup("session_s")(session(cpus, work))
     tr.attach(spark)
-    val wl: Workload = a.workload match {
-      case "upload_upsert" => new UploadUpsert(spark, tr, a.seed, work)
-      case "page_browse" => new PageBrowse(spark, tr, a.seed, work)
-      case "gate_mix" => new GateMix(spark, tr, a.seed, a.data)
-    }
-    wl.setup(setup)
-    val setupS = setup.parts.values.sum
-
-    val ops = ArrayBuffer[Op]()
-    val t0 = System.nanoTime()
-    while (ops.size < wl.minOps || System.nanoTime() - t0 < a.seconds * 1000000000L)
-      ops += wl.op(ops.size)
-    val measuredS = (System.nanoTime() - t0) / 1e9
-    val finalOk = wl.finish()
+    val o = measure(a, spark, tr, setup, work)
     val heapMb = retainedHeapMb()
-    val failed = if (finalOk) ops.count(!_.ok) else ops.size
     val load1 = loadavg()
 
-    val (p50, mean) = wl.summary(ops.toSeq)
-    val e2e = Seq("setup_s" -> (setupS, "s"), "op_p50_ms" -> (p50, "ms"),
-      "op_mean_ms" -> (mean, "ms"), "heap_retained_mb" -> (heapMb, "MB"))
+    val setupS = o.setup.map(_._2).sum
+    val e2e = Seq("setup_s" -> (setupS, "s"), "op_p50_ms" -> (o.p50, "ms"),
+      "op_mean_ms" -> (o.mean, "ms"), "heap_retained_mb" -> (heapMb, "MB"))
     val metrics =
       if (!a.trace) e2e
-      else {
-        tr.drain()
-        Layers.complete(wl.layers(ops.toSeq) ++
-          setup.parts.map { case (k, v) => s"setup.$k" -> v } ++
-          Map("trace.op_p50_ms" -> p50, "trace.op_mean_ms" -> mean,
-            "jvm.peak_rss_mb" -> peakRssMb()))
-      }
+      else Layers.complete(o.layers ++
+        o.setup.map { case (k, v) => s"setup.$k" -> v } ++
+        Map("trace.op_p50_ms" -> o.p50, "trace.op_mean_ms" -> o.mean,
+          "jvm.peak_rss_mb" -> peakRssMb()))
     tr.writeSpans(Paths.get(a.out, s"spans-${a.workload}-${a.seed}.jsonl"))
 
     val detail = Seq(
       "workload" -> s""""${a.workload}"""", "seed" -> a.seed.toString,
-      "cpus" -> cpus.toString, "ops" -> ops.size.toString,
-      "measured_s" -> num(measuredS), "final_check" -> finalOk.toString,
-      "tail_percentile" -> Stats.tailPercentile(ops.size).map(_.toString).getOrElse("null"),
+      "cpus" -> cpus.toString, "ops" -> o.ops.toString,
+      "measured_s" -> num(o.measuredS), "final_check" -> o.finalOk.toString,
       "loadavg_start" -> num(load0), "loadavg_end" -> num(load1),
       "peak_rss_mb" -> num(peakRssMb())) ++
-      wl.detail(ops.toSeq).map { case (k, v) => k -> num(v) } ++
-      setup.parts.toSeq.map { case (k, v) => s"setup_$k" -> num(v) }
+      o.detail.map { case (k, v) => k -> num(v) } ++
+      o.setup.map { case (k, v) => s"setup_$k" -> num(v) }
     println(detail.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
     spark.stop()
 
     val metricJson = metrics.map { case (k, (v, u)) =>
       s""""$k":{"value":${num(v)},"unit":"$u"}""" }.mkString("{", ",", "}")
-    println(s"""{"correct":${failed == 0},"attempted":${ops.size},""" +
-      s""""failed":$failed,"metrics":$metricJson}""")
+    println(s"""{"correct":${o.failed == 0},"attempted":${o.ops},""" +
+      s""""failed":${o.failed},"metrics":$metricJson}""")
   }
 }
 

@@ -32,10 +32,20 @@ object Stats {
   /** Samples ranked above the nearest-rank `p`th percentile of `n`. */
   def beyond(n: Int, p: Int): Int = n - math.ceil(n * p / 100.0).toInt
 
-  /** The highest percentile of `ladder` that leaves at least `minBeyond`
-    * samples beyond it, or None when even the lowest rung does not.
+  /** Samples a reported tail percentile must leave beyond it. */
+  val MinBeyond = 10
+
+  /** The percentiles a tail is reported at, highest first. */
+  val Ladder: Seq[Int] = Seq(99, 95, 90, 75, 50)
+
+  /** The highest percentile of [[Ladder]] that leaves at least
+    * [[MinBeyond]] samples beyond it, or None when even p50 does not.
     */
-  def tailPercentile(n: Int, minBeyond: Int = 10,
-      ladder: Seq[Int] = Seq(99, 95, 90, 75, 50)): Option[Int] =
-    ladder.sorted.reverse.find(p => beyond(n, p) >= minBeyond)
+  def tailPercentile(n: Int): Option[Int] = Ladder.find(p => beyond(n, p) >= MinBeyond)
+
+  /** The tail of `xs` as (percentile, value), only when the rule picks a
+    * percentile above the median: a p50 tail would repeat the median.
+    */
+  def tail(xs: Seq[Double]): Option[(Int, Double)] =
+    tailPercentile(xs.size).filter(_ > 50).map(p => p -> percentile(xs, p))
 }

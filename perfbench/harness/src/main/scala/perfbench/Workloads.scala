@@ -192,10 +192,10 @@ final class UploadUpsert(spark: SparkSession, tr: Trace, seed: Long, work: Path)
   def detail(ops: Seq[Main.Op]): Seq[(String, Double)] = {
     val s = ops.map(_.ms / 1000)
     Seq("import_rows_per_s" -> ops.map(_.rows).sum / s.sum,
-      "upload_p50_s" -> Stats.median(s),
-      "upload_tail_s" -> Stats.percentile(s, Stats.tailPercentile(s.size).getOrElse(50)),
-      "uploads_large" -> ops.count(_.rows >= 100000).toDouble,
-      "rows_imported" -> ops.map(_.rows).sum.toDouble)
+      "upload_p50_s" -> Stats.median(s)) ++
+      Stats.tail(s).map { case (p, v) => s"upload_p${p}_s" -> v } ++
+      Seq("uploads_large" -> ops.count(_.rows >= 100000).toDouble,
+        "rows_imported" -> ops.map(_.rows).sum.toDouble)
   }
 }
 
@@ -246,10 +246,10 @@ final class PageBrowse(spark: SparkSession, tr: Trace, seed: Long, work: Path)
 
   def detail(ops: Seq[Main.Op]): Seq[(String, Double)] = {
     val ms = ops.map(_.ms)
-    Seq("page_p50_ms" -> Stats.median(ms),
-      "page_tail_ms" -> Stats.percentile(ms, Stats.tailPercentile(ms.size).getOrElse(50)),
-      "live_keys" -> expected.keys.toDouble,
-      "deep_share" -> ops.count(_.label != "page-0").toDouble / ops.size)
+    Seq("page_p50_ms" -> Stats.median(ms)) ++
+      Stats.tail(ms).map { case (p, v) => s"page_p${p}_ms" -> v } ++
+      Seq("live_keys" -> expected.keys.toDouble,
+        "deep_share" -> ops.count(_.label != "page-0").toDouble / ops.size)
   }
 }
 
@@ -283,9 +283,9 @@ final class GateMix(spark: SparkSession, tr: Trace, seed: Long, data: String)
   private var order: Seq[String] = Nil
   private var expectedSums: Map[String, Checksum.Sum] = Map.empty
 
-  // two measured runs of every gate: one run each left a run's median
-  // gate time moving with whichever gate happened to be slow
-  def minOps: Int = 2 * Main.mixGates.size
+  // three measured runs of every gate: the host's speed drifts by tens of
+  // percent within seconds, so a run's gate times need several passes
+  def minOps: Int = 3 * Main.mixGates.size
 
   def setup(clock: SetupClock): Unit = {
     expectedSums = clock("inputs_s")(GateMix.loadChecksums(

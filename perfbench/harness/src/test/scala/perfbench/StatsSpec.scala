@@ -16,6 +16,12 @@ class StatsSpec extends AnyFunSuite {
     assert(Stats.tailPercentile(19).isEmpty)
   }
 
+  test("a tail is reported only above the median") {
+    val xs = (1 to 100).map(_.toDouble)
+    assert(Stats.tail(xs).contains(90 -> 90.0))
+    assert(Stats.tail(xs.take(39)).isEmpty)
+  }
+
   test("samples beyond a nearest-rank percentile") {
     assert(Stats.beyond(100, 90) == 10)
     assert(Stats.beyond(99, 90) == 9)

@@ -35,17 +35,6 @@ OUT = Path(".bench_out")
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 700
 
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
-
-
 def fail(code, msg):
     print(f"perfbench: {msg}", file=sys.stderr)
     sys.exit(code)
@@ -65,35 +54,39 @@ def source_stamp(root):
 
 
 def build(root):
-    """Compiles engine and harness offline; returns the runtime classpath."""
+    """Compiles engine and harness offline; returns the runtime classpath
+    and the JVM options the harness build derives from the engine's."""
     stamp = source_stamp(root)
-    cp_file, stamp_file = BUILD / "classpath.txt", BUILD / "stamp"
-    if (cp_file.exists() and stamp_file.exists()
+    cp_file, opts_file, stamp_file = (
+        BUILD / "classpath.txt", BUILD / "jvm-options.txt", BUILD / "stamp")
+    if not (cp_file.exists() and opts_file.exists() and stamp_file.exists()
             and stamp_file.read_text() == stamp):
-        return cp_file.read_text().strip()
-    BUILD.mkdir(exist_ok=True)
-    env = dict(os.environ)
-    env["COURSIER_MODE"] = "offline"
-    env["SBT_OPTS"] = env.get("SBT_OPTS") or (
-        "-Dsbt.override.build.repos=true -Dsbt.offline=true -Xmx2g")
-    log = BUILD / "build.log"
-    with open(log, "w") as f:
-        try:
-            rc = subprocess.run(
-                ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
-                 "export perfbench/Runtime/fullClasspath"],
-                cwd=HARNESS, env=env, stdout=f, stderr=subprocess.STDOUT,
-                stdin=subprocess.DEVNULL, timeout=BUILD_TIMEOUT_S).returncode
-        except subprocess.TimeoutExpired:
-            rc = -1
-    lines = log.read_text().splitlines()
-    cps = [l for l in lines if l.startswith("/") and ".jar" in l]
-    if rc != 0 or not cps:
-        sys.stderr.write("\n".join(lines[-30:]) + "\n")
-        fail(3, f"build failed (exit {rc}); log in {log}")
-    cp_file.write_text(cps[-1])
-    stamp_file.write_text(stamp)
-    return cps[-1]
+        BUILD.mkdir(exist_ok=True)
+        env = dict(os.environ)
+        env["COURSIER_MODE"] = "offline"
+        env["SBT_OPTS"] = env.get("SBT_OPTS") or (
+            "-Dsbt.override.build.repos=true -Dsbt.offline=true -Xmx2g")
+        log = BUILD / "build.log"
+        with open(log, "w") as f:
+            try:
+                rc = subprocess.run(
+                    ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
+                     "export perfbench/Runtime/fullClasspath",
+                     "perfbench/jvmOptionsFile"],
+                    cwd=HARNESS, env=env, stdout=f, stderr=subprocess.STDOUT,
+                    stdin=subprocess.DEVNULL, timeout=BUILD_TIMEOUT_S).returncode
+            except subprocess.TimeoutExpired:
+                rc = -1
+        lines = log.read_text().splitlines()
+        cps = [l for l in lines if l.startswith("/") and ".jar" in l]
+        opts = HARNESS / "target" / "jvm-options.txt"
+        if rc != 0 or not cps or not opts.is_file():
+            sys.stderr.write("\n".join(lines[-30:]) + "\n")
+            fail(3, f"build failed (exit {rc}); log in {log}")
+        cp_file.write_text(cps[-1])
+        opts_file.write_text(opts.read_text().strip())
+        stamp_file.write_text(stamp)
+    return cp_file.read_text().strip(), opts_file.read_text().split("\n")
 
 
 def result_line(line):
@@ -125,12 +118,12 @@ def main():
     if not (DATA.is_dir() and (HERE / "data" / "gate_checksums.json").is_file()):
         fail(2, f"gate data missing under {HERE / 'data'}")
 
-    cp = build(root)
+    cp, jvm_opts = build(root)
     shutil.rmtree(WORK, ignore_errors=True)
     (WORK / "tmp").mkdir(parents=True)
     OUT.mkdir(exist_ok=True)
-    cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-           + ["-Xmx3g", "-Duser.timezone=UTC", "-XX:-UsePerfData",
+    cmd = (["java"] + jvm_opts
+           + ["-XX:-UsePerfData",
               f"-Djava.io.tmpdir={WORK / 'tmp'}", "-cp", cp, "perfbench.Main",
               "--workload", a.workload, "--seed", str(a.seed),
               "--seconds", str(a.seconds), "--trace", str(a.trace),
