@@ -34,7 +34,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--pairs", type=int, default=3)
-    ap.add_argument("--seconds", type=int, default=8)
+    ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--out", required=True)
     a = ap.parse_args()
     rec = {"seed": a.seed, "seconds": a.seconds, "workloads": {}}
