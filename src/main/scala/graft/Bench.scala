@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the SF dir given
   * by SPARK_GRAFT_SF_DIR and prints ONE compact JSON line.
@@ -17,28 +16,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill on tmpfs: this host's disk stalls under iowait and
-      // was adding 10x noise to shuffle-heavy query timings
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .config("spark.sql.warehouse.dir",
-        s"${Scratch.dir}/graft_warehouse_${Scratch.runToken}")
-      // ContextCleaner only releases dropped broadcasts / localCheckpoint
-      // blocks / shuffle files after a DRIVER GC notices the references
-      // died; the default periodic-GC interval (30 min) never fires
-      // inside one bench run, so across 259 queries the old gen fills
-      // with dead blocks and every late-run query pays mounting GC.
-      // Harmless on an idle host; on a loaded one it is the difference
-      // between 0.08 s and 30 s for an 11-row query (r12 driver-record
-      // tail spikes — attribution in BENCH_NOTES.md).
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // session warmup so the first measured query doesn't pay one-time
     // JVM/codegen/scheduler costs; also primes each table's footer/schema
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -59,16 +37,6 @@ object Bench {
         Seq.empty
       } finally CacheTracker.releaseAll()
     val trainSec = (System.nanoTime() - trainT0) / 1e9
-    // dev loop: SPARK_GRAFT_BENCH_ONLY=prefix[,prefix...] times just the
-    // matching queries and skips the DuckDB baseline — for profiling one
-    // query without paying the full surface
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) =>
-        ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
     val errors = scala.collection.mutable.LinkedHashSet[String]()
     // per-query JVM GC time (ms, summed over the reps): the r12 driver
     // record showed recurring 30 s tail spikes on 11-row queries that a
@@ -81,7 +49,7 @@ object Bench {
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
     val gcLedger = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val results = selected.map { case (name, fn) =>
+    val results = SparkEntry.queries.map { case (name, fn) =>
       val gc0 = gcMs()
       val times = (1 to Reps).flatMap { _ =>
         val t0 = System.nanoTime()
@@ -117,8 +85,7 @@ object Bench {
     // sandbox's python (a bench-harness concern, like check_oracle.py —
     // the library itself never touches it); absent python/duckdb the
     // bench degrades to spark-only output.
-    val duck: Map[String, Option[Double]] =
-      if (only.isDefined) Map.empty else duckdbBaseline(sfDir)
+    val duck: Map[String, Option[Double]] = duckdbBaseline(sfDir)
     val ratios = results.flatMap { case (k, v) =>
       duck.getOrElse(k, None).collect { case d if d > 0 => k -> v / d } }
     val duckJson = results.keys.map { k =>
@@ -230,27 +197,10 @@ object Bench {
   /** The prior committed per-query record: the file named by
     * SPARK_GRAFT_BENCH_BASELINE, else the newest BENCH_SELF_r*.json in
     * the working directory (highest round number). Returns (filename,
-    * queries map); (None, empty) when no baseline exists or parsing
-    * fails — the bench then reports an empty regression list rather
-    * than failing.
-    */
-  def priorRecord(): (Option[String], Map[String, Double]) = {
-    val (n, q, _) = priorRecordWithDuck()
-    (n, q)
-  }
-
-  /** [[priorRecord]] plus the baseline record's `duckdb_total` (0.0 when
-    * absent) — kept for spec compatibility; the load estimate itself now
-    * rides [[priorRecordFull]]'s per-query map.
-    */
-  def priorRecordWithDuck(): (Option[String], Map[String, Double], Double) = {
-    val (n, q, d) = priorRecordFull()
-    (n, q, d.values.sum)
-  }
-
-  /** [[priorRecord]] plus the baseline record's per-query `duckdb` map
-    * (empty when absent) — the denominator side of the common-queries
-    * load estimate ([[loadFactorCommon]]).
+    * queries map, per-query `duckdb` map — the denominator side of the
+    * common-queries load estimate, [[loadFactorCommon]]); (None, empty,
+    * empty) when no baseline exists or parsing fails — the bench then
+    * reports an empty regression list rather than failing.
     */
   def priorRecordFull(): (Option[String], Map[String, Double], Map[String, Double]) = {
     try {
@@ -323,20 +273,10 @@ object Bench {
     if (sys.env.get("SPARK_GRAFT_DUCKDB_BENCH").contains("0") ||
       !java.nio.file.Files.exists(script)) return Map.empty
     try {
-      def jstr(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
       val oraclePath =
         java.nio.file.Paths.get(Scratch.dir, s"graft_oracle_${Scratch.runToken}.json")
       java.nio.file.Files.write(oraclePath,
-        SparkEntry.oracleSql.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-          .mkString("{", ",", "}").getBytes("UTF-8"))
+        Json.obj(SparkEntry.oracleSql).getBytes("UTF-8"))
       val timeout = sys.env.getOrElse("SPARK_GRAFT_DUCKDB_TIMEOUT", "120")
       // stderr is INHERITed (not piped): verbose DuckDB binder errors could
       // otherwise fill the ~64KB pipe buffer and deadlock the child before

@@ -157,7 +157,7 @@ object SqlQueries {
     // tokenize+shingle stream PER REFERENCE — `shingled` is read three
     // times (sig + both sides of the exact-Jaccard verify), so the
     // regex/split/shingle per-row work ran 3× per rep. Two-step fix,
-    // each A/B'd (QueryProbe sqltwin, alternating reps):
+    // each A/B'd (alternating reps; OPTIMIZATION_r17.md §2):
     //  (a) an in-memory CACHE of the rebuilt shingle table LOST
     //      (3.54 vs 2.88 s median — caching 10k big string arrays
     //      costs more than one recompute; null recorded, don't

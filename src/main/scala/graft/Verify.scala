@@ -2,39 +2,40 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [prefix...]
+  * With prefixes, only the queries whose names start with one of them
+  * are dumped — a new query is oracle-checked in seconds instead of
+  * re-running all of them.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .config("spark.sql.warehouse.dir",
-        s"${Scratch.dir}/graft_warehouse_${Scratch.runToken}")
-      // same long-session hygiene as Bench: release dead broadcast /
-      // checkpoint / shuffle state during the 260-query run instead of
-      // letting the old gen fill (see BENCH_NOTES.md, r13 attribution)
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [prefix...]")
+    val spark = Session()
+    try run(spark, args(0), args(1), args.drop(2).toSeq)
+    finally spark.stop()
+  }
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      prefixes: Seq[String]): Unit = {
+    val selected =
+      if (prefixes.isEmpty) SparkEntry.queries
+      else SparkEntry.queries.filter { case (n, _) => prefixes.exists(n.startsWith) }
     new java.io.File(outDir).mkdirs()
-    // Drop stale dumps from prior runs: a leftover directory for a since-
-    // renamed query would otherwise be picked up by the comparator as a
-    // rows-only entry and pollute the gate.
-    val live = SparkEntry.queries.keySet
+    // Drop every dump not written by this run: a leftover directory (a
+    // since-renamed query, or one outside the prefixes) would otherwise
+    // be picked up by the comparator as a rows-only entry and pollute
+    // the gate.
     Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !live.contains(f.getName))
+      .filter(f => f.isDirectory && !selected.contains(f.getName))
       .foreach { f =>
         def rm(x: java.io.File): Unit = {
           Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete(); ()
         }
         rm(f)
       }
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,21 +43,7 @@ object Verify {
       }
       finally CacheTracker.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.obj(SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }))
   }
 }

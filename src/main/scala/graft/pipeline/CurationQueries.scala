@@ -1210,11 +1210,12 @@ object CurationQueries {
 
   /** Fixed-round h-index iteration: every round recomputes h for ALL
     * nodes (one aggregate over the whole edge stream), rounds batched
-    * `batch` per eager localCheckpoint. The step references its input
+    * 2 per eager localCheckpoint. The step references its input
     * ONCE (adj join est → histogram fold → docs left join), so b=2
-    * batching is safe from the 2^b plan blowup. r15 A/B (QueryProbe
-    * `kcoreab`, alternating reps, identical checksums): this form at
-    * b=2 beat the r14 dirty-delta (3.16 vs 4.52 s median, pairwise in
+    * batching is safe from the 2^b plan blowup. r15 A/B (alternating
+    * reps, identical checksums; BENCH_NOTES.md "Round-15 notes", b=2
+    * re-confirmed under LoopConf.tight in OPTIMIZATION_r16.md §1): this
+    * form at b=2 beat the r14 dirty-delta (3.16 vs 4.52 s median, pairwise in
     * every rep) AND the r13 window form (3.94 s) — the dirty set's
     * semi-join + distinct + per-round convergence scan cost more than
     * the full-recompute rounds they saved, and b=5 was a measured null
@@ -1222,7 +1223,7 @@ object CurationQueries {
     * eats the saved checkpoints, unlike pprLoop's flat step).
     */
   private[graft] def kcoreLoop(docs: org.apache.spark.sql.DataFrame,
-      adj: org.apache.spark.sql.DataFrame, rounds: Int, batch: Int = 2):
+      adj: org.apache.spark.sql.DataFrame, rounds: Int):
       org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -1243,7 +1244,7 @@ object CurationQueries {
       .localCheckpoint(true)
     var r = 0
     while (r < rounds) {
-      val b = math.min(batch, rounds - r)
+      val b = math.min(2, rounds - r)
       est = (1 to b).foldLeft(est)((e, _) => step(e)).localCheckpoint(true)
       r += b
     }
@@ -1358,7 +1359,7 @@ object CurationQueries {
     import s.implicits._
     val (docs, adj, n) = linkGraph(s, dir)
     // r16: loop under LoopConf.tight — AQE's per-exchange jobs were ~90%
-    // of the gate (QueryProbe kcoreab: 2.20 → 1.47 s, checksum-identical)
+    // of the gate (2.20 → 1.47 s, checksum-identical; OPTIMIZATION_r16.md §1)
     graft.LoopConf.tight(s, n) { kcoreLoop(docs, adj, 10) }
       .select($"node", $"c".as("core")).orderBy($"node")
   }
@@ -1663,14 +1664,6 @@ object CurationQueries {
       rounds: Int): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_BFS_DEBUG")
-    def t0 = System.nanoTime()
-    var t = t0
-    def lap(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[frontierBfs] $tag ${(now - t) / 1e9}%.3f s")
-      t = now
-    }
     val lmDf = sources.toDF("src_node", "lm")
     var frontier = docs
       .join(broadcast(lmDf), $"doc_id" === $"src_node")
@@ -1678,7 +1671,6 @@ object CurationQueries {
       .localCheckpoint(true)
     var leaves = List(frontier)
     var done = frontier.isEmpty
-    lap("init")
     // b=2 per checkpoint, AQE ON: both re-measured r14 on the frontier
     // shape — b=4 was a wash (analysis of the 2^b-inlined anti-join
     // chain eats the saved jobs, the r10 dense-relax null again) and
@@ -1704,11 +1696,9 @@ object CurationQueries {
         fr = nx
       }
       val newly = acc.localCheckpoint(true)
-      lap(s"batch r=$r cp")
       leaves ::= newly
       frontier = newly.filter($"d" === lit(r + b.toLong))
       done = frontier.isEmpty
-      lap(s"batch r=$r isEmpty")
       r += b
     }
     leaves.reduce(_ unionByName _)

@@ -147,9 +147,10 @@ object StreamQueries {
     * so the setting takes effect per gate invocation), restoring the
     * session's batch settings afterwards.
     *
-    * Floor profile (r10, StreamProfile at sf0.1): a gate's cost is
-    * ~400-700 ms per micro-batch almost independent of rows — addBatch
-    * is stage-scheduling + state-store task machinery (a 0-row
+    * Floor profile (r10, per-micro-batch durationMs at sf0.1; closed in
+    * OPTIMIZATION_r16.md "Not yet optimized / deliberately left"): a
+    * gate's cost is ~400-700 ms per micro-batch almost independent of
+    * rows — addBatch is stage-scheduling + state-store task machinery (a 0-row
     * watermark batch still burns ~250 ms/task of executor time), wal +
     * offset commits are ~70 ms/batch on tmpfs, incremental re-planning
     * ~100 ms/batch. Batch COUNT is semantics (file splits, sentinel
