@@ -170,28 +170,60 @@ object AdvancedJoins {
 
   val groupingSetsSql: String = groupingSetsBody("orders")
 
-  /** Approximate distinct (HyperLogLog++) next to the exact counts it
+  /** Approximate distinct (HyperLogLog) next to the exact counts it
     * approximates. HLL sketches are implementation-specific, so the
     * approx values themselves can't cross-engine match — instead the
     * hash-checked output is the exact counts plus a 5%-error-bound flag
     * computed against each engine's own sketch. Both engines' HLL
     * implementations hold well under 5% at these cardinalities, so the
     * flags are deterministically 1 and the row hash-matches.
+    *
+    * Two single-row aggregates joined by a (broadcast) cross join, the
+    * shape of [[hllSketchMerge]]: one takes the two exact counts, the
+    * other the two sketches. In one aggregate, RewriteDistinctAggregates
+    * feeds every non-distinct aggregate through the DISTINCT `Expand`,
+    * so each of the ~16.7k distinct groups at sf0.01 held its own sketch
+    * buffers (a 425.8 MiB shuffle estimate, a 1.8 MiB task binary).
+    *
+    * The sketch is DataSketches HLL at lgK = [[approxDistinctLgK]]: 2^14
+    * buckets, rsd ≈ 1.04/√16384 ≈ 0.8%, in ONE binary buffer.
+    * `approx_count_distinct(x, 0.01)` is HLL++ at the same p = 14 but
+    * lays its registers out as 1,639 long buffer columns per sketch in a
+    * non-codegen HashAggregate, a cost paid per buffer, not per row (it
+    * got slower, not faster, on 4 partitions). Traced perfbench gate_mix
+    * (seed 11, 4 vCPU): the gate 3.8 s → 0.3 s, task CPU 5,036 → 97 ms,
+    * shuffle 2.49 → 0.13 MB. Don't trade precision below lgK 14 for
+    * time: the default 0.05 rsd already missed the 5% flag on sf0.001's
+    * 1473 orderkeys.
     */
   val approxDistinct: Q = (s, dir) => {
     import s.implicits._
-    Tables(s, dir, "lineitem").agg(
-      countDistinct($"l_orderkey").as("exact_orders"),
-      countDistinct($"l_partkey").as("exact_parts"),
-      // rsd 0.01 on BOTH columns: the default 0.05 sketch missed the 5%
-      // assertion on the sf0.001 corpus's 1473 orderkeys (per-engine
-      // error-bound gate — DuckDB's own sketch is checked by the oracle)
-      (abs(approx_count_distinct($"l_orderkey", 0.01) - countDistinct($"l_orderkey"))
-        .cast("double") / countDistinct($"l_orderkey") <= 0.05).cast("int")
-        .as("orders_within_5pct"),
-      (abs(approx_count_distinct($"l_partkey", 0.01) - countDistinct($"l_partkey"))
-        .cast("double") / countDistinct($"l_partkey") <= 0.05).cast("int")
-        .as("parts_within_5pct"))
+    def within5pct(est: String, exact: String) =
+      (abs(col(est) - col(exact)).cast("double") / col(exact) <= 0.05).cast("int")
+    approxDistinctCounts(s, dir).select($"exact_orders", $"exact_parts",
+      within5pct("est_orders", "exact_orders").as("orders_within_5pct"),
+      within5pct("est_parts", "exact_parts").as("parts_within_5pct"))
+  }
+
+  /** DataSketches HLL precision of [[approxDistinct]] (log2 of buckets). */
+  private[graft] val approxDistinctLgK = 14
+
+  /** One row: the exact distinct counts of `l_orderkey` / `l_partkey`
+    * (`exact_orders`, `exact_parts`) beside their lgK-14 sketch
+    * estimates (`est_orders`, `est_parts`).
+    */
+  private[graft] def approxDistinctCounts(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    val li = Tables(s, dir, "lineitem")
+    val est = li.agg(
+      hll_sketch_estimate(hll_sketch_agg($"l_orderkey", approxDistinctLgK))
+        .as("est_orders"),
+      hll_sketch_estimate(hll_sketch_agg($"l_partkey", approxDistinctLgK))
+        .as("est_parts"))
+    li.agg(countDistinct($"l_orderkey").as("exact_orders"),
+        countDistinct($"l_partkey").as("exact_parts"))
+      .crossJoin(broadcast(est))
   }
 
   /** Bucketed tables provisioned once per (JVM, sf dir): both fact

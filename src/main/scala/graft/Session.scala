@@ -4,12 +4,13 @@ import org.apache.spark.sql.SparkSession
 /** The one session every main builds ([[Bench]], [[Verify]],
   * [[graft.tools.Dev]]), so a dev tool measures under the settings of the
   * bench it explains: `local[SPARK_GRAFT_CPUS]` (default 4) with that
-  * many shuffle partitions, UTC, no UI, log level WARN.
+  * many shuffle partitions, UTC, no UI. The log level, WARN from the
+  * first line, comes from `src/main/resources/log4j2.properties`.
   */
 object Session {
   def apply(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -29,7 +30,5 @@ object Session {
       // tail spikes — attribution in BENCH_NOTES.md).
       .config("spark.cleaner.periodicGC.interval", "90s")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }

@@ -173,15 +173,20 @@ object SqlQueries {
     // self-join reads it twice, exactly the DSL gate's persist shape.
     // All query logic remains SQL text; minhash_md5 / posexplode /
     // the banding window still resolve through the SQL parser.
+    // The staged statement takes `sig` as a FROM subquery, not a WITH:
+    // with a WITH inside the persisted plan, reading the view from the
+    // final statement's WITH body missed the cache, and the band table
+    // was silently rebuilt on both sides of the self-join (PlanSpec pins
+    // the cached read).
     graft.text.DedupQueries.shingledCorpus(s, dir)
       .createOrReplaceTempView("graft_shingled_mh")
     val bandt = s.sql(
-      s"""WITH sig AS (SELECT doc_id, posexplode(minhash_md5(sh, $k)) AS (i, h)
-         |        FROM graft_shingled_mh)
-         |SELECT doc_id, CAST(floor(i / $r) AS INT) AS band,
+      s"""SELECT doc_id, CAST(floor(i / $r) AS INT) AS band,
          |  array_join(transform(array_sort(collect_list(struct(i, h))),
          |    st -> st.h), '|') AS mh
-         |FROM sig GROUP BY doc_id, CAST(floor(i / $r) AS INT)""".stripMargin)
+         |FROM (SELECT doc_id, posexplode(minhash_md5(sh, $k)) AS (i, h)
+         |      FROM graft_shingled_mh) sig
+         |GROUP BY doc_id, CAST(floor(i / $r) AS INT)""".stripMargin)
     graft.CacheTracker.persistTracked(bandt)
       .createOrReplaceTempView("graft_bandt_mh")
     s.sql(

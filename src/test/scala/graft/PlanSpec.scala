@@ -928,6 +928,16 @@ class PlanSpec extends SparkSpec {
       "the native minhash kernel must resolve through the SQL parser:\n" + bp)
     assert(!p.contains("CartesianProduct"),
       "candidates must come from the (band, mh) equi-join:\n" + p)
+    // executed: the staged statement is served from its persisted
+    // relation, on its own and inside the final statement's WITH body
+    // (a WITH in the staged text once made that lookup miss)
+    val bandScan = "InMemoryRelation \\[doc_id#\\d+L, band#\\d+, mh#\\d+\\]".r
+    assert(bandScan.findFirstIn(p).isDefined,
+      "the candidate self-join must read the persisted band table:\n" + p)
+    val staged = spark.table("graft_bandt_mh").queryExecution.executedPlan.toString
+    assert(bandScan.findFirstIn(staged).isDefined,
+      "graft_bandt_mh must be served from its persisted relation:\n" + staged)
+    assert(!staged.contains("CartesianProduct"), staged)
   }
 
   test("sql interval twin: grid explode feeds an equi-join, no cartesian") {
